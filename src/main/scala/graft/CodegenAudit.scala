@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** r15 audit, r16 round-gate: walk every catalog query's plan,
   * janino-compile its whole-stage-codegen units, and report the three
@@ -114,15 +114,8 @@ object CodegenAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val outPath = sys.env.getOrElse("GRAFT_AUDIT_OUT", "CODEGEN_AUDIT.json")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-codegen-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder("graft-codegen-audit", GraftSession.CorrectnessCores)
       .config("spark.sql.adaptive.enabled", "false") // AQE wraps the plan; codegenToSeq sees nothing
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var rows = List.empty[(String, UnitStats)]

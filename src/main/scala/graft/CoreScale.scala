@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
-
 /** Core-scaling duel at a replicated factor (r19, verdict item 5).
   *
   * The driver's 8-vs-32-core bench twin at sf0.1 shows every ratio ≈ 1
@@ -20,12 +18,11 @@ import org.apache.spark.sql.SparkSession
   * count, so the artifact shows compute-bound queries actually using
   * the cores.
   *
-  * Protocol = Crossover's: 5 reps per query against the noop sink,
-  * first dropped as warm-up, median of the remaining 4; cache-clear +
-  * unpersist + GC between reps; HostCalib window stamps. Core count
-  * comes from SPARK_GRAFT_CPUS (master AND shuffle.partitions — the
-  * bench's scale-adaptive convention, NOT a hardcoded 32, so the
-  * 8-core run shuffles 8-wide like a real 8-core deployment would).
+  * Protocol = Crossover's: 5 reps per query of [[Harness.timeOnce]],
+  * first dropped as warm-up, median of the remaining 4; HostCalib
+  * window stamps. Core count comes from SPARK_GRAFT_CPUS, else the
+  * host's (master AND shuffle.partitions, so the 8-core run shuffles
+  * 8-wide like a real 8-core deployment would).
   *
   * Usage:  SPARK_GRAFT_CPUS=32 sbt "runMain graft.CoreScale <outFile> [factor]"
   * then once more with SPARK_GRAFT_CPUS=8; tools/corescale.sh runs both
@@ -53,20 +50,10 @@ object CoreScale {
   def main(args: Array[String]): Unit = {
     val outFile = args.headOption.getOrElse("/tmp/corescale.json")
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores()
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-corescale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val loadStart = Harness.loadavg()
+    val spark = GraftSession.builder("graft-corescale", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val dirs = Seq(
@@ -79,26 +66,15 @@ object CoreScale {
     // window stamp AFTER corpus synthesis (its I/O would contaminate)
     val calibStart = HostCalib.seconds(spark)
 
-    def time(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      dt
-    }
     def fmt(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
 
     val Reps = 5
     val cells = Cohort.flatMap { name =>
       try {
         spark.sparkContext.setJobDescription(s"corescale x$factor $name")
-        val ts = (1 to Reps).map(_ => time(name))
-        val timed = ts.drop(1).sorted
-        val med = (timed(1) + timed(2)) / 2.0
+        val ts = (1 to Reps).map(_ =>
+          Harness.timeOnce(spark)(SparkEntry.queries(name)(spark, dir)))
+        val med = Harness.dropFirstMedian(ts)
         println(s"[corescale] cores=$cpus x$factor $name median=${fmt(med)} " +
           s"runs=${ts.map(fmt).mkString(",")}")
         Some(name -> (med, ts))
@@ -109,7 +85,7 @@ object CoreScale {
       }
     }
     val calibEnd = HostCalib.seconds(spark)
-    val loadEnd = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
+    val loadEnd = Harness.loadavg()
 
     val cellsJson = cells.map { case (n, (med, ts)) =>
       s""""$n":{"median":${fmt(med)},"runs":[${ts.map(fmt).mkString(",")}]}"""

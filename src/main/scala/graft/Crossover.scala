@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.Locale
-import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.Harness.{dropFirstMedian, jsonString}
+import org.apache.spark.sql.DataFrame
 
 /** Spark half of the floor-resident crossover duel — the committed form
   * of round 13's decisive evidence (ARCHITECTURE.md "The crossover,
@@ -58,16 +60,6 @@ object Crossover {
     "q71_heavy_hitters",
     "q146_dsir_resample")
 
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/crossover")
     val factors =
@@ -86,30 +78,11 @@ object Crossover {
       case None => Cohort
     }
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-crossover")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cores = GraftSession.cores()
+    val loadStart = Harness.loadavg()
+    val spark = GraftSession.builder("graft-crossover", cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // builder runs INSIDE the timed region: q107's tier census is
-    // plan-construction work and belongs to the operator's cost
-    def time(build: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      build.write.mode("overwrite").format("noop").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc() // same debris fix as Bench/ScaleBench
-      dt
-    }
     def fmt(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
 
     // q88/q97/q107/q146 read documents, q64/q72/q71 lineitem, q42
@@ -137,21 +110,7 @@ object Crossover {
     // host-window stamp after the corpora are ensured (synthesis I/O
     // would contaminate the reading) — see HostCalib
     val calibStart = HostCalib.seconds(spark)
-    // Idle-window gate (r17 verdict item 8): CROSSOVER_r17 ran at
-    // load_end 15.8/21.8 and a contaminated window inverted a q72 duel
-    // verdict once that round — mark (or refuse, under
-    // SPARK_GRAFT_REQUIRE_IDLE=1) instead of relying on the reader.
-    val idleRef = sys.env.getOrElse("SPARK_GRAFT_IDLE_REF", "1.9").toDouble
-    val windowOk = spark.sparkContext.defaultParallelism != 32 ||
-      calibStart <= idleRef * 1.15
-    if (!windowOk) {
-      System.err.println(f"[crossover] WINDOW-CONTAMINATED calib_start=" +
-        f"$calibStart%.3f > 1.15 x idle_ref=$idleRef%.2f")
-      if (sys.env.get("SPARK_GRAFT_REQUIRE_IDLE").contains("1")) {
-        System.err.println("[crossover] SPARK_GRAFT_REQUIRE_IDLE=1 — refusing to sweep")
-        spark.stop(); sys.exit(3)
-      }
-    }
+    val windowOk = Harness.windowOk(spark, calibStart, "crossover")
 
     val Reps = 5 // first dropped as warmup, median of the remaining 4
     val runs = scala.collection.mutable.LinkedHashMap[(String, Int), Seq[Double]]()
@@ -159,11 +118,10 @@ object Crossover {
       cohort.foreach { name =>
         val dir = corpora(factor)
         try {
-          val ts = (1 to Reps).map(_ => time(buildQuery(name, factor, dir)))
+          val ts = (1 to Reps).map(_ =>
+            Harness.timeOnce(spark)(buildQuery(name, factor, dir)))
           runs((name, factor)) = ts
-          val timed = ts.drop(1).sorted
-          val med = (timed(1) + timed(2)) / 2.0
-          println(s"[crossover] x$factor $name median=${fmt(med)} " +
+          println(s"[crossover] x$factor $name median=${fmt(dropFirstMedian(ts))} " +
             s"runs=${ts.map(fmt).mkString(",")}")
         } catch { case e: Throwable =>
           // a self-gated query may legitimately refuse a replicated
@@ -176,42 +134,38 @@ object Crossover {
     }
 
     val calibEnd = HostCalib.seconds(spark)
-    val loadEnd = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
-    def median4(ts: Seq[Double]): Double = {
-      val s = ts.drop(1).sorted
-      (s(1) + s(2)) / 2.0
-    }
+    val loadEnd = Harness.loadavg()
     val done: Seq[String] = cohort.filter(n => factors.exists(f => runs.contains((n, f))))
     val sparkJson = done.map { name =>
       val perFactor = factors.flatMap { f =>
         runs.get((name, f)).map { ts =>
-          s""""x$f": {"median": ${fmt(median4(ts))}, "runs": [${ts.map(fmt).mkString(", ")}]}"""
+          s""""x$f": {"median": ${fmt(dropFirstMedian(ts))}, "runs": [${ts.map(fmt).mkString(", ")}]}"""
         }
       }.mkString(", ")
-      s"${jsonStr(name)}: {$perFactor}"
+      s"${jsonString(name)}: {$perFactor}"
     }.mkString(",\n  ")
     val sqlJson = done.map { name =>
       val perFactor = factors.flatMap { f =>
         if (runs.contains((name, f)))
-          Some(s""""x$f": ${jsonStr(oracleSqlFor(name, f))}""")
+          Some(s""""x$f": ${jsonString(oracleSqlFor(name, f))}""")
         else None
       }.mkString(", ")
-      s"${jsonStr(name)}: {$perFactor}"
+      s"${jsonString(name)}: {$perFactor}"
     }.mkString(",\n  ")
     val corporaJson = factors
-      .map(f => s""""x$f": ${jsonStr(corpora(f))}""").mkString(", ")
+      .map(f => s""""x$f": ${jsonString(corpora(f))}""").mkString(", ")
     val out =
       s"""{
-         |"base": ${jsonStr(baseDir)},
+         |"base": ${jsonString(baseDir)},
          |"factors": [${factors.mkString(", ")}],
-         |"cohort": [${cohort.map(jsonStr).mkString(", ")}],
+         |"cohort": [${cohort.map(jsonString).mkString(", ")}],
          |"protocol": {
-         |  "spark": "local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}], shuffle.partitions=32, AQE, noop sink, 5 reps (first dropped as warmup) -> median of 4, clearCache+unpersist+System.gc between reps",
+         |  "spark": "local[$cores], shuffle.partitions=$cores, AQE, noop sink, 5 reps (first dropped as warmup) -> median of 4, clearCache+unpersist+System.gc between reps",
          |  "q107_support": "MinPairSupport * factor (replication multiplies every pair's support by the factor; a fixed threshold would promote the whole vocabulary into the frequent set)",
          |  "corpora": "ScaleBench replicated documents (synth v${ScaleBench.SynthVersion}), same cache as the scaling table"
          |},
          |"corpora": {$corporaJson},
-         |"env": {"cpus": ${Runtime.getRuntime.availableProcessors()}, "load_start": $loadStart, "load_end": $loadEnd, "calib_start": ${fmt(calibStart)}, "calib_end": ${fmt(calibEnd)}, "calib_parallelism": ${spark.sparkContext.defaultParallelism}, "window_ok": $windowOk, "idle_ref": $idleRef, "calib_note": "HostCalib fixed ALU probe, seconds; idle-host reference ~1.9 AT parallelism 32 — stamps are only comparable at equal calib_parallelism (the probe partitions by it); window_ok = calib_start within 1.15x idle_ref"},
+         |"env": {"cpus": ${Runtime.getRuntime.availableProcessors()}, "load_start": $loadStart, "load_end": $loadEnd, "calib_start": ${fmt(calibStart)}, "calib_end": ${fmt(calibEnd)}, "calib_parallelism": ${spark.sparkContext.defaultParallelism}, "window_ok": $windowOk, "idle_ref": ${Harness.idleRef}, "calib_note": "HostCalib fixed ALU probe, seconds; idle-host reference ~1.9 AT parallelism 32 — stamps are only comparable at equal calib_parallelism (the probe partitions by it); window_ok = calib_start within 1.15x idle_ref"},
          |"spark": {
          |  $sparkJson
          |},

@@ -167,12 +167,7 @@ object FixtureGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-fixtures")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-fixtures", GraftSession.CorrectnessCores)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -50,11 +50,7 @@ object HostCalib {
 
   /** Standalone sizing/inspection entry: prints one probe value. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-hostcalib")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-hostcalib", GraftSession.cores()).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // one untimed warm-up drains JIT/codegen cold start from the stamp
     seconds(spark)
